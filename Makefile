@@ -1,4 +1,4 @@
-.PHONY: check-fast test bench install-hooks
+.PHONY: check-fast test test-codecs bench install-hooks
 
 # Pure-Python guardrails (~2 s, no Spark): registry/COVERAGE.md sync
 # and the driver 50-name lexical-window invariant. Run before EVERY
@@ -13,6 +13,19 @@ check-fast:
 
 test:
 	python -m pytest tests/ -x -q
+
+# The codec/feature family (c05_*, c54, c55, c76, c122, and s32 which shares
+# c05_audio_features' row function) in minutes instead of
+# the ~20-minute tier-1 run: oracle parity for the family, the codec
+# unit tests, the _map_rows equivalence test and the plan gate that
+# pins which codec entries re-widen their scan.
+CODEC_LLM_TESTS = bmp or wav or png or jpeg or flac or avi or gif or audio \
+	or image or tiff or mpeg or compressed or codec
+test-codecs:
+	python -m pytest -q tests/test_map_rows.py \
+	  "tests/test_plans.py::test_codec_entries_numbered_repartition_exactly_the_cpu_heavy_set" \
+	  tests/test_oracle_parity.py -k "c05_ or c54_ or c55_ or c76_ or c122_ or s32_ or map_rows or numbered_repartition"
+	python -m pytest -q tests/test_llm.py -k "$(CODEC_LLM_TESTS)"
 
 bench:
 	python bench.py

@@ -30,7 +30,7 @@ NotImplementedError: MP3 Layer II/III SPECTRAL decode and PCM
 synthesis (the B.2/B.7/B.3 committee tables are unavailable
 offline — see decode_mp3 / synthesize_mpeg1_pcm for why reciting
 them would be the wrong-but-self-consistent trap),
-arithmetic/hierarchical JPEG, >2-channel FLAC.
+lossless/arithmetic JPEG, >2-channel FLAC.
 """
 
 from __future__ import annotations
@@ -1028,7 +1028,8 @@ def decode_jpeg(payload: bytes) -> dict:
     and Pq=1 16-bit DQT entries — the entropy decode was already
     precision-agnostic. Raises ValueError on non-JPEG input or
     corrupt/truncated streams, NotImplementedError for
-    hierarchical/arithmetic coding (out of scope here).
+    lossless/arithmetic coding (out of scope here; hierarchical DHP
+    streams dispatch to decode_jpeg_hierarchical).
     """
     import numpy as np
 

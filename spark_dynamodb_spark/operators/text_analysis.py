@@ -2182,8 +2182,8 @@ def tokenizer_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the encode closure references module globals (_bpe_apply_merge_py),
     # pickled BY REFERENCE — ship the package zip so out-of-repo worker
-    # processes can import it (the multimodal/_ensure_worker_imports
-    # lesson; in-repo pytest never catches this class)
+    # processes can import it (the multimodal._map_rows lesson; in-repo
+    # pytest never catches this class)
     _ship_package(spark)
     merges = [
         (lhs, rhs) for _, lhs, rhs, _cnt in _bpe_train_collected(spark, sf_dir)

@@ -881,9 +881,13 @@ def _ship_package(spark) -> None:
     session whose driver imported us by file path (the spark-graft
     driver does) have no sys.path entry for the repo. addPyFile
     distributes a zip of the package to every worker — the same
-    mechanism that ships application eggs on a real cluster.
+    mechanism that ships application eggs on a real cluster. Shipped
+    once per SparkContext, which owns the pyFiles list: foreachBatch
+    hands every micro-batch a fresh session wrapper over the same
+    context.
     """
-    if getattr(spark, "_dynamo_pkg_shipped", False):
+    sc = spark.sparkContext
+    if getattr(sc, "_dynamo_pkg_shipped", False):
         return
     import zipfile
 
@@ -902,8 +906,8 @@ def _ship_package(spark) -> None:
                     )
                     zf.write(full, rel)
     os.replace(tmp_zip, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
-    spark._dynamo_pkg_shipped = True
+    sc.addPyFile(zip_path)
+    sc._dynamo_pkg_shipped = True
 
 
 def register(spark, force: bool = False) -> None:

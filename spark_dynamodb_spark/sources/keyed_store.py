@@ -143,23 +143,3 @@ def create_table(
     }
     write_meta(store_dir, table, meta)
     return meta
-
-
-def refresh_gsis(spark: SparkSession, table: str, store_dir: str = DEFAULT_STORE_DIR) -> None:
-    """Re-materialize every GSI from the base data (DynamoDB replicates
-    GSIs asynchronously; our writer calls this synchronously on commit —
-    strictly stronger consistency, documented deviation)."""
-    meta = read_meta(store_dir, table)
-    if not meta.get("gsis"):
-        return
-    base = spark.read.parquet(data_dir(store_dir, table))
-    tdir = os.path.join(store_dir, table)
-    for gsi in meta["gsis"]:
-        out = os.path.join(tdir, "gsi", gsi["name"])
-        tmp = out + ".tmp-" + uuid.uuid4().hex[:8]
-        _write_partitioned(
-            base, gsi["hash_key"], gsi.get("range_key"), tmp, meta["n_segments"]
-        )
-        if os.path.isdir(out):
-            shutil.rmtree(out)
-        os.rename(tmp, out)

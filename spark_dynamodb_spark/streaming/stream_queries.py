@@ -3258,6 +3258,8 @@ def stream_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from spark_dynamodb_spark.operators.multimodal import (
         AUDIO_FEATURES_SCHEMA,
+        _by_doc_id,
+        _map_rows,
         audio_features_extract,
     )
 
@@ -3281,17 +3283,14 @@ def stream_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_root = _scratch_dir("s32_feats_")
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        feats = (
+        docs = _by_doc_id(
             batch.filter(
                 (F.octet_length("text") == F.length("text"))
                 & (F.length("text") > 0)
             )
-            .repartition(
-                int(sess.conf.get("spark.sql.shuffle.partitions")), "doc_id"
-            )
-            .select("doc_id", "text")
-            .mapInPandas(audio_features_extract, AUDIO_FEATURES_SCHEMA)
+        )
+        feats = _map_rows(
+            docs.select("doc_id", "text"), audio_features_extract, AUDIO_FEATURES_SCHEMA
         )
         feats.write.mode("overwrite").parquet(
             os.path.join(out_root, f"batch_{batch_id:06d}")

@@ -1935,3 +1935,53 @@ def test_c126_perplexity_single_text_scan(spark, sf_dir):
     assert scans == 1, plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and "text" not in m.group(1), plan
+
+
+def test_codec_entries_numbered_repartition_exactly_the_cpu_heavy_set(spark, sf_dir):
+    """The measured one-task lesson (a compacted fixture is one scan
+    task; JPEG went 108 s -> 7 s at sf0.1 once re-widened): exactly the
+    13 CPU-heavy pure-Python codec entries put a NUMBERED
+    ``Exchange hashpartitioning(doc_id, <shuffle partitions>)`` below
+    their MapInPandas; every cheaper multimodal entry stays narrow."""
+    import re
+    from itertools import takewhile
+
+    from spark_dynamodb_spark.registry import load_all
+
+    expected = {
+        "multimodal_png_adam7",
+        "multimodal_png_paletted",
+        "multimodal_flac",
+        "multimodal_jpeg",
+        "multimodal_jpeg_progressive",
+        "multimodal_video",
+        "multimodal_gif",
+        "multimodal_gif_interlaced",
+        "multimodal_tiff",
+        "multimodal_bmp_rle",
+        "multimodal_mpeg_audio",
+        "multimodal_jpeg12",
+        "multimodal_jpeg_hier",
+    }
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    numbered = re.compile(
+        rf"Exchange hashpartitioning\(doc_id#\d+L?, {n}\), REPARTITION_BY_NUM"
+    )
+
+    def depth(line: str) -> int:
+        return re.search(r"[A-Za-z*(]", line).start()
+
+    entries = {
+        spec.fn.__name__: spec.fn
+        for spec in load_all().specs().values()
+        if spec.fn.__module__ == "spark_dynamodb_spark.operators.multimodal"
+    }
+    widened = set()
+    for name, fn in entries.items():
+        lines = physical_plan(fn(spark, sf_dir)).splitlines()
+        for i, line in enumerate(lines):
+            if "MapInPandas" in line:
+                below = takewhile(lambda sub: depth(sub) > depth(line), lines[i + 1 :])
+                if any(numbered.search(sub) for sub in below):
+                    widened.add(name)
+    assert widened == expected, (sorted(widened - expected), sorted(expected - widened))

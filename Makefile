@@ -1,4 +1,4 @@
-.PHONY: check-fast test test-codecs bench install-hooks
+.PHONY: check-fast test test-codecs test-connector bench install-hooks
 
 # Pure-Python guardrails (~2 s, no Spark): registry/COVERAGE.md sync
 # and the driver 50-name lexical-window invariant. Run before EVERY
@@ -26,6 +26,16 @@ test-codecs:
 	  "tests/test_plans.py::test_codec_entries_numbered_repartition_exactly_the_cpu_heavy_set" \
 	  tests/test_oracle_parity.py -k "c05_ or c54_ or c55_ or c76_ or c122_ or s32_ or map_rows or numbered_repartition"
 	python -m pytest -q tests/test_llm.py -k "$(CODEC_LLM_TESTS)"
+
+# The connector (sources/dynamo.py, keyed_store.py): the source tests,
+# the writer's merge property tests and the a-family oracle parity
+# (a04_ ... a26_, incl. the a05 GSI and a09 binary-key reads).
+CONNECTOR_ORACLES = a04_ or a05_ or a06_ or a07_ or a09_ or a11_ or a12_ \
+	or a13_ or a14_ or a18_ or a19_ or a22_ or a23_ or a24_ or a25_ or a26_
+test-connector:
+	python -m pytest -q tests/test_dynamo_source.py
+	python -m pytest -q tests/test_properties.py -k merge
+	python -m pytest -q tests/test_oracle_parity.py -k "$(CONNECTOR_ORACLES)"
 
 bench:
 	python bench.py

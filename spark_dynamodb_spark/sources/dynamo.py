@@ -34,6 +34,14 @@ Read options (reference names preserved, SURVEY §2 Part A):
   bytesPerRCU (4000), filterPushdown (true), throughput (100 —
   on-demand default), columns (projection: comma-separated),
   region/roleArn (no-op shims).
+Read partitioning: an explicit readPartitions wins. Otherwise a scan
+  plans ceil(table bytes / 128 MB) partitions with a floor of 8 (capped
+  at the segment count), like the reference's TotalSegments. A lookup —
+  a pushed EqualTo or In on the hash key of the table or of the
+  indexName GSI (GetItem/BatchGetItem/Query) — drops the floor: the
+  reference sends those as single requests, and hash partitioning puts
+  each key's items in one segment, so one partition holds every match
+  of a store under 128 MB.
 Write options: writeBatchSize (25), targetCapacity, update, delete, putIfAbsent,
 versionedUpdate (+versionColumn), transactPutIfAbsent (all-or-nothing),
   throughput, bytesPerWCU (1000).
@@ -351,15 +359,21 @@ class DynamoReader(DataSourceReader):
         if not files:
             return [scan_segment(0, 1, [], 0.0)]
         n_opt = _opt(options=self.options, key="readPartitions")
-        if n_opt is not None:
+        if n_opt is not None:  # an explicit readPartitions always wins
             n = max(1, int(n_opt))
         else:
             # segments = f(table bytes / target partition size), like
             # TableConnector computes TotalSegments from table size.
             total_bytes = sum(os.path.getsize(f) for f in files)
             target = 128 * 1024 * 1024
-            n = min(len(files), max(1, -(-total_bytes // target)))
-            n = max(n, min(len(files), 8))
+            n = max(1, -(-total_bytes // target))
+            # A scan keeps a floor of 8 parallel segments. A lookup (a
+            # pushed EqualTo/In on the hash key, i.e. GetItem/BatchGet/
+            # Query) does not: hash partitioning puts every match of one
+            # key value in one segment, so each value's work already sat
+            # in one task and the other tasks found nothing.
+            if not self._pins_hash_key():
+                n = max(n, 8)
         n = min(n, len(files))
         provisioned = float(self.meta.get("rcu") or 0.0)
         if provisioned <= 0:  # on-demand → 'throughput' option, default 100
@@ -369,6 +383,20 @@ class DynamoReader(DataSourceReader):
         return [
             scan_segment(i, n, files[i::n], rate) for i in range(n)
         ]
+
+    def _pins_hash_key(self) -> bool:
+        """True when a pushed filter is an EqualTo or In on the hash key
+        of the table or index being read: a lookup, not a scan."""
+        hash_key = self.meta["hash_key"]
+        if self.index_name:
+            hash_key = next(
+                g["hash_key"] for g in self.meta.get("gsis", [])
+                if g["name"] == self.index_name
+            )
+        return any(
+            isinstance(f, (EqualTo, In)) and f.attribute == (hash_key,)
+            for f in self.pushed
+        )
 
     @property
     def _rcu_factor(self) -> float:
@@ -573,7 +601,7 @@ class DynamoWriter(DataSourceWriter):
         key_cols = [meta["hash_key"]] + (
             [meta["range_key"]] if meta.get("range_key") else []
         )
-        staged_paths = [m.path for m in messages if m and m.rows >= 0]
+        staged_paths = [m.path for m in messages if m]
         staged = (
             pd.concat([pq.read_table(p).to_pandas() for p in staged_paths])
             if staged_paths
@@ -781,7 +809,13 @@ class DynamoWriter(DataSourceWriter):
         return marked[marked["_merge"] == "left_only"].drop(columns="_merge")
 
     def _rewrite(self, merged, key_cols, arrow_schema) -> None:
-        """Atomically replace data segments (+ GSIs) with the merged table."""
+        """Atomically replace data segments (+ GSIs) with the merged table.
+
+        Segments are assigned by ``pd.util.hash_pandas_object(key) %
+        n_segments``, not by the murmur3 ``repartition(n, key)`` of
+        ``keyed_store.create_table``, so the key -> segment map changes at
+        the first commit (see the keyed_store module docstring).
+        """
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq

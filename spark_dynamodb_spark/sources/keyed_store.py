@@ -9,8 +9,15 @@ Layout (FIXTURES.md "DynamoDB-shaped fixture"):
       data/docs-*.jsonl     # (format="jsonl") schemaless document segments
 
 The reference's table semantics mapped here (SURVEY §1.1):
-- partition key → files are hash-partitioned by ``hash_key`` (Spark
-  ``repartition(n, key)``), so a key lives in exactly one segment;
+- partition key → files are hash-partitioned by ``hash_key``, so a key
+  lives in exactly one segment. Two partition functions assign the
+  segments: ``create_table`` uses Spark's ``repartition(n, key)``
+  (murmur3), while ``DynamoWriter._rewrite`` uses
+  ``pd.util.hash_pandas_object(key) % n``. So the key → segment map
+  changes after the first commit. The one-segment-per-key property
+  holds under both, and it is all the reader relies on (a hash-key
+  lookup plans one partition); pruning a lookup to the owning segment
+  must wait until both paths share one function;
 - sort key → rows sorted by (hash_key, range_key) within segments
   (``sortWithinPartitions``);
 - GSI → a *materialized* copy re-partitioned by the index keys, like

@@ -682,3 +682,137 @@ def test_consistent_read_doubles_rcu(spark, sf_dir):
     ).count()
     consistent = time.monotonic() - t0
     assert consistent > eventual + 1.0
+
+
+def _lookup_agrees(spark, table, pred, **opts):
+    """The pushed read plans one partition and returns what the
+    unpushed plan (all segments, Spark-side filter) returns."""
+    pushed = read_dynamo(spark, table, **opts).filter(pred)
+    unpushed = read_dynamo(spark, table, filterPushdown="false", **opts).filter(pred)
+    assert pushed.rdd.getNumPartitions() == 1, str(pred)
+    got = sorted(map(tuple, pushed.collect()))
+    assert got == sorted(map(tuple, unpushed.collect())), str(pred)
+    return got
+
+
+@pytest.fixture(scope="module")
+def events_kv(spark, sf_dir):
+    """Hash+range table (user_id, ts) with a GSI on event_type."""
+    name = "t_lookup_events"
+    keyed_store.create_table(
+        spark,
+        load_table(spark, sf_dir, "events"),
+        name,
+        hash_key="user_id",
+        range_key="ts",
+        gsis=[{"name": "by_type", "hash_key": "event_type", "range_key": "ts"}],
+        n_segments=4,
+    )
+    return name
+
+
+def test_hash_key_lookup_plans_one_partition(spark, sf_dir, customer_kv, events_kv):
+    """A pushed EqualTo/In on the hash key (GetItem/BatchGet/Query) is
+    planned as one partition, not the scan's 8-task floor; results
+    equal the unpushed plan. Covers a long key, a hash+range table
+    (the pin returns the whole item collection), a GSI hash key and
+    the a09 binary key."""
+    import hashlib
+
+    from spark_dynamodb_spark.sources.dynamo_queries import (
+        _ensure_part_binkey_kv,
+        dynamo_binary_key,
+        dynamo_gsi,
+    )
+
+    key = F.col("c_custkey")
+    assert len(_lookup_agrees(spark, customer_kv, key == 7)) == 1
+    assert len(_lookup_agrees(spark, customer_kv, key.isin(3, 9, 11, 10**9))) == 3
+    # a key pin plus a non-key conjunct is still a lookup
+    _lookup_agrees(spark, customer_kv, key.isin(3, 9) & (F.col("c_acctbal") > 0))
+
+    user = (
+        read_dynamo(spark, events_kv).groupBy("user_id").count()
+        .orderBy(F.desc("count")).first()
+    )
+    assert user["count"] > 1
+    got = _lookup_agrees(spark, events_kv, F.col("user_id") == user["user_id"])
+    assert len(got) == user["count"]  # the whole item collection
+    got = _lookup_agrees(spark, events_kv, F.col("event_type") == "click", indexName="by_type")
+    assert len(got) > 0
+
+    binkey = _ensure_part_binkey_kv(spark, sf_dir)
+    want = [hashlib.md5(str(k).encode()).digest() for k in (7, 42)]
+    assert len(_lookup_agrees(spark, binkey, F.col("pk_b") == want[0])) == 1
+    assert len(_lookup_agrees(spark, binkey, F.col("pk_b").isin(want))) == 2
+    assert dynamo_binary_key(spark, sf_dir).rdd.getNumPartitions() == 1
+    assert dynamo_gsi(spark, sf_dir).rdd.getNumPartitions() == 1
+
+
+def test_scans_keep_their_partition_count(spark, customer_kv, events_kv):
+    """Reads that pin no hash key plan one partition per segment (up
+    to 8), as an unfiltered read does; an explicit readPartitions wins
+    over the lookup plan."""
+    def n(df):
+        return df.rdd.getNumPartitions()
+
+    cust = read_dynamo(spark, customer_kv)
+    key = F.col("c_custkey") == 7
+    assert n(cust) == 4
+    assert n(cust.filter(F.col("c_acctbal") > 0)) == 4
+    assert n(cust.filter(F.col("c_custkey") > 7)) == 4  # a range, not a pin
+    assert n(cust.filter(~key)) == 4
+    assert n(read_dynamo(spark, customer_kv, filterPushdown="false").filter(key)) == 4
+    assert n(read_dynamo(spark, customer_kv, readPartitions=2).filter(key)) == 2
+
+    # neither the range key nor, on the GSI, the base table's hash key
+    # is the hash key being read
+    events = read_dynamo(spark, events_kv)
+    ts = events.select("ts").first()["ts"]
+    assert n(events.filter(F.col("ts") == ts)) == n(events) == 4
+    gsi = read_dynamo(spark, events_kv, indexName="by_type")
+    assert n(gsi.filter(F.col("user_id") == 1)) == n(gsi) > 1
+
+
+def test_jsonl_hash_key_lookup_one_partition(spark, tmp_path):
+    """The one-partition lookup plan over schemaless jsonl segments:
+    EqualTo/In on the hash key return the same rows as the unpushed
+    plan, with SQL three-valued logic for docs that lack an attribute
+    (a NULL comparison never matches)."""
+    tdir = tmp_path / "lk_kv" / "data"
+    tdir.mkdir(parents=True)
+    segments = [
+        [{"pk": 1, "qty": 5}, {"pk": 4, "name": "d"}],
+        [{"pk": 2, "qty": 7, "name": "b"}, {"pk": 6, "qty": 9}],
+        [{"pk": 3}, {"pk": 5, "qty": 1}],
+    ]
+    for i, docs in enumerate(segments):
+        with open(tdir / f"seg-{i}.jsonl", "w") as f:
+            for d in docs:
+                f.write(json.dumps(d) + "\n")
+    keyed_store.write_meta(
+        str(tmp_path),
+        "lk_kv",
+        {
+            "table": "lk_kv",
+            "hash_key": "pk",
+            "range_key": None,
+            "rcu": 0,
+            "wcu": 0,
+            "gsis": [],
+            "format": "jsonl",
+            "n_segments": 3,
+        },
+    )
+    store = str(tmp_path)
+    assert read_dynamo(spark, "lk_kv", storeDir=store).rdd.getNumPartitions() == 3
+    pk, qty = F.col("pk"), F.col("qty")
+    for pred, want in [
+        (pk == 2, [2]),
+        (pk.isin(1, 3, 4, 7), [1, 3, 4]),
+        (pk.isin(1, 2, 3, 4) & (qty != 5), [2]),  # pk 3 and 4 lack qty
+        (pk.isin(1, 2, 3) & ~(qty > 6), [1]),
+        (pk.isin(3, 4, 5) & qty.isNull(), [3, 4]),
+    ]:
+        got = _lookup_agrees(spark, "lk_kv", pred, storeDir=store)
+        assert sorted(r[0] for r in got) == want, str(pred)
